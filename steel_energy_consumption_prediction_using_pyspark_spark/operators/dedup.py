@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from steel_energy_consumption_prediction_using_pyspark_spark.operators.text import (
+    _utf8_offsets_data,
     fingerprint,
     normalize_text,
     shingles,
@@ -129,19 +130,14 @@ def _gram_hash32_np(strs, limit: int):
     big-endian) of the first `limit` elements of a FLAT pyarrow string
     array, as np.int64 — the shared Arrow-kernel twin of the
     :func:`gram_hash32` JVM expression. hashlib's md5 is C code; the
-    only per-element Python is the generator the fromiter drains."""
+    only per-element Python is the generator the fromiter drains.
+    Raises TypeError unless ``strs`` is ``pa.string()``."""
     from hashlib import md5
 
     import numpy as np
 
-    if limit == 0:
-        return np.empty(0, dtype=np.int64)
     sa = strs.slice(0, limit)
-    bufs = sa.buffers()
-    goffs = np.frombuffer(bufs[1], dtype=np.int32)[
-        sa.offset : sa.offset + len(sa) + 1
-    ]
-    mv = memoryview(bufs[2])
+    goffs, mv = _utf8_offsets_data(sa)
     return np.fromiter(
         (
             int.from_bytes(md5(mv[goffs[i] : goffs[i + 1]]).digest()[:4], "big")

@@ -274,20 +274,6 @@ def _py_dot(a: list[float], b: list[float]) -> float:
     return acc
 
 
-def _fmt_double_lit(x: float) -> str:
-    """Shortest round-trip decimal for a double, as a Spark SQL literal.
-    Python's repr emits the shortest string that re-parses to the same
-    double; Spark's literal parser (Java Double.parseDouble) is equally
-    correctly-rounded, so the JVM sees the bit-identical value that
-    F.lit(x) would have shipped through py4j."""
-    s = repr(float(x))
-    if "e" in s:
-        return s.upper() + "D"
-    if "." not in s:
-        s += ".0"
-    return s + "D"
-
-
 def kmeans_cosine_det(
     train: DataFrame,
     k: int = 16,

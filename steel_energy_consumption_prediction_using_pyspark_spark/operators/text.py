@@ -273,6 +273,30 @@ def winnow_windows(hashes: Column | str, w: int = 4) -> Column:
     return F.array_distinct(wins)
 
 
+def _utf8_offsets_data(strs):
+    """(int32 offsets of the array's own slice, memoryview of the data
+    buffer) of a flat ``pa.string()`` array, for kernels that hash each
+    element's UTF-8 bytes in place. Raises TypeError on any other type:
+    a ``large_string`` (int64 offsets, which the Python worker produces
+    under ``spark.sql.execution.arrow.useLargeVarTypes``) read as int32
+    would hash garbage byte ranges instead of failing. A data buffer
+    may be absent when every element is empty."""
+    import numpy as np
+    import pyarrow as pa
+
+    if strs.type != pa.string():
+        raise TypeError(
+            f"Arrow kernel needs pa.string() (int32 offsets), got {strs.type}"
+        )
+    if len(strs) == 0:
+        return np.zeros(1, dtype=np.int32), memoryview(b"")
+    bufs = strs.buffers()
+    offs = np.frombuffer(bufs[1], dtype=np.int32)[
+        strs.offset : strs.offset + len(strs) + 1
+    ]
+    return offs, memoryview(bufs[2] if bufs[2] is not None else b"")
+
+
 def _winnow_arrow(
     staged: DataFrame, k: int, w: int, keep: list[str], out_col: str
 ) -> DataFrame:
@@ -358,11 +382,7 @@ def _winnow_arrow(
             joined = pc.binary_join_element_wise(
                 *[vals.slice(j, M) for j in range(k)], " "
             )
-            jb = joined.buffers()
-            goffs = np.frombuffer(jb[1], dtype=np.int32)[
-                joined.offset : joined.offset + len(joined) + 1
-            ]
-            mv = memoryview(jb[2])
+            goffs, mv = _utf8_offsets_data(joined)
             raw = np.frombuffer(
                 b"".join(
                     md5(mv[goffs[i] : goffs[i + 1]]).digest()

@@ -35,6 +35,28 @@ Local properties are inherited per-thread, so distinct pools then
 share the cluster fairly (equal-share weights by default; a
 fairscheduler.xml can weight them). tools/concurrency_bench.py sets
 this per worker thread.
+
+Generated-code cache: Spark keeps every compiled whole-stage and
+expression class in one JVM-wide cache bounded by the static conf
+``spark.sql.codegen.cache.maxEntries`` (default 100, split across
+Guava's segments, so eviction starts earlier still). The engine's
+working set is far larger: one pass of the llm-notebook benchmark
+queries (minhash_lsh, ivf_probe, text_quality, string_indexer,
+csv_ingest, merge_upsert) needs about 155 distinct classes, and one
+pass of the full 237-query registry at sf0.001 compiles 3,313-3,343
+in a fresh session. With the default bound LRU evicts a cycle larger
+than itself, so every repeated plan recompiled every class (about
+146 Janino compiles per pass) and the JIT never settled. get_session
+sizes the cache to :data:`CODEGEN_CACHE_ENTRIES` so a repeated query
+compiles nothing. It is set at session creation only: a foreign
+session (e.g. the driver harness's plain session, which only gets
+``apply_runtime_confs``) keeps Spark's default of 100.
+
+Driver heap: in local mode the driver JVM is the whole engine, so
+``spark.driver.memory`` defaults to :func:`default_driver_memory_mb`,
+min(16g, 40% of physical memory or the cgroup limit), leaving room
+for the test suites that start two or three JVMs at once.
+``SPARK_DRIVER_MEMORY`` overrides it.
 """
 
 from __future__ import annotations
@@ -42,6 +64,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Static SQL conf: read when the JVM-wide codegen cache is built, so it
+# must go on the builder, never in RUNTIME_CONFS. Sized from a measured
+# working set: one pass of the full 237-query registry at sf0.001
+# compiles 3,313-3,343 generated classes in a fresh session.
+CODEGEN_CACHE_ENTRIES = 4096
+
+# Default driver heap: this share of physical memory (or of the cgroup
+# limit, when lower), capped at DRIVER_MEMORY_CAP_MB.
+DRIVER_MEMORY_SHARE = 0.4
+DRIVER_MEMORY_CAP_MB = 16 * 1024
+CGROUP_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
 
 # Confs that are safe (and desirable) to apply to an existing session —
 # these are SQL confs, settable at runtime.
@@ -84,6 +121,48 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def _meminfo_total_bytes(path: str) -> int | None:
+    try:
+        with open(path) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024  # kB
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _cgroup_limit_bytes(path: str) -> int | None:
+    """The cgroup memory limit in ``path``, or None when the file is
+    absent or unlimited (v2 ``max``; v1 writes a near-2^63 sentinel,
+    which the min() against MemTotal discards anyway)."""
+    try:
+        with open(path) as f:
+            raw = f.read().strip()
+        return None if raw == "max" else int(raw)
+    except (OSError, ValueError):
+        return None
+
+
+def default_driver_memory_mb(
+    meminfo: str = "/proc/meminfo",
+    cgroup_files: tuple[str, ...] = CGROUP_LIMIT_FILES,
+) -> int:
+    """min(16g, 40% of MemTotal or the tightest cgroup limit), in MB.
+    Falls back to the cap when no limit can be read."""
+    limits = [_meminfo_total_bytes(meminfo)]
+    limits += [_cgroup_limit_bytes(p) for p in cgroup_files]
+    known = [b for b in limits if b]
+    if not known:
+        return DRIVER_MEMORY_CAP_MB
+    return min(DRIVER_MEMORY_CAP_MB, int(min(known) * DRIVER_MEMORY_SHARE) >> 20)
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` when set, else the sized default."""
+    return os.environ.get("SPARK_DRIVER_MEMORY") or f"{default_driver_memory_mb()}m"
+
+
 def get_session(
     app_name: str = "steel-energy-engine",
     master: str | None = None,
@@ -109,7 +188,8 @@ def get_session(
         .master(master or f"local[{par}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or par))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -320,6 +320,69 @@ def test_winnow_kernel_matches_expression(spark, sf_dir):
     assert kern == expr
 
 
+def test_string_kernels_reject_large_string():
+    """The md5 gram kernels read Arrow string offsets as int32. A
+    large_string array (int64 offsets, produced under
+    spark.sql.execution.arrow.useLargeVarTypes or by a store written
+    with them) must raise instead of hashing misread byte ranges."""
+    import pyarrow as pa
+    import pytest
+
+    big = pa.array(["a b c", "d e f"], pa.large_string())
+    with pytest.raises(TypeError, match="large_string"):
+        D._gram_hash32_np(big, len(big))
+    # The winnow kernel parses its joined grams through the same helper.
+    with pytest.raises(TypeError, match="large_string"):
+        X._utf8_offsets_data(big)
+
+
+def test_gram_hash_kernel_all_empty_slice_matches_expression(spark):
+    """A sliced array whose elements are all empty strings hashes like
+    the gram_hash32 expression on the same strings."""
+    import pyarrow as pa
+
+    arr = pa.array(["lead", "", "", "tail"], pa.string()).slice(1, 2)
+    df = spark.createDataFrame([("",), ("",)], "g string")
+    want = [r.h for r in df.select(D.gram_hash32(F.col("g")).alias("h")).collect()]
+    assert D._gram_hash32_np(arr, len(arr)).tolist() == want
+    assert D._gram_hash32_np(arr, 0).tolist() == []
+
+
+def test_winnow_kernel_all_empty_batch_matches_expression(spark):
+    """A batch in which no row has a full window (null, empty, fewer
+    than k tokens, fewer than w grams) takes the kernel's empty branch
+    and still matches the expression twin row for row."""
+    d = spark.createDataFrame(
+        [
+            Row(doc_id=1, text=None),
+            Row(doc_id=2, text=""),
+            Row(doc_id=3, text="one two"),
+            Row(doc_id=4, text="a b c d"),
+        ],
+        "doc_id long, text string",
+    ).coalesce(1)
+    staged = d.withColumn(
+        "_wf_h",
+        F.transform(
+            X.shingles_from(X.tokens(X.normalize_text("text")), n=3),
+            lambda g: F.md5(g),
+        ),
+    )
+    expr = {
+        r.doc_id: r.fps
+        for r in staged.select(
+            "doc_id", X.winnow_windows("_wf_h", w=4).alias("fps")
+        ).collect()
+    }
+    kern = {
+        r.doc_id: r.fps
+        for r in X.with_winnow_fingerprints(
+            d, "text", k=3, w=4, drop_text=True
+        ).collect()
+    }
+    assert kern == expr and all(v == [] for v in kern.values())
+
+
 def test_pos_grams_kernel_matches_expression(spark, sf_dir):
     """The positional-gram Arrow kernel (round 10, passage_scrub's
     gram stream) must emit the exact (id, p, gram) multiset that
