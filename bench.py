@@ -424,29 +424,23 @@ def main() -> None:
     # SF times the full build (~40 s at sf10), and the scale ladder
     # then compares warm sf1 against cold sf10 (the r7
     # signature_store_build "31x" flag was exactly this, not
-    # super-linear growth). Evict the published asset AND its session
-    # marker right before timing, so every round at every SF measures
-    # the same thing: one cold build. Downstream warm-path queries
-    # (incremental_dedup, *_materialized probes) run AFTER the build
-    # in BENCH_QUERIES order, so they keep their warm contract.
+    # super-linear growth). Evict the published asset right before
+    # timing, so every round at every SF measures the same thing: one
+    # cold build. Downstream warm-path queries (incremental_dedup,
+    # *_materialized probes) run AFTER the build in BENCH_QUERIES
+    # order, so they keep their warm contract.
     import shutil as _shutil
 
-    from steel_energy_consumption_prediction_using_pyspark_spark.workload import (
-        text as _wtext,
-        vector as _wvector,
+    from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
+        asset_path,
     )
 
-    def _evict_sig_store() -> None:
-        _wtext._SIG_STORE.clear()
-        _shutil.rmtree(_wtext._sig_store_base(sf_dir), ignore_errors=True)
-
-    def _evict_ann_index() -> None:
-        _wvector._DISK_INDEX.clear()
-        _shutil.rmtree(_wvector._index_base(sf_dir), ignore_errors=True)
+    def _evictor(kind: str):
+        return lambda: _shutil.rmtree(asset_path(kind, sf_dir), ignore_errors=True)
 
     COLD_BUILD_EVICT = {
-        "signature_store_build": _evict_sig_store,
-        "ann_index_build": _evict_ann_index,
+        "signature_store_build": _evictor("sig_store/"),
+        "ann_index_build": _evictor("ann_index/"),
     }
 
     # Repetition policy: NOTES documents 10-15% run-to-run variance on

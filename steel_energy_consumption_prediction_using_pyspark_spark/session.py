@@ -48,7 +48,9 @@ in a fresh session. With the default bound LRU evicts a cycle larger
 than itself, so every repeated plan recompiled every class (about
 146 Janino compiles per pass) and the JIT never settled. get_session
 sizes the cache to :data:`CODEGEN_CACHE_ENTRIES` so a repeated query
-compiles nothing. It is set at session creation only: a foreign
+compiles nothing; RUNTIME_CONFS leave the codegen stage id out of
+generated class names, so a repeat whose AQE stages are numbered in a
+different order still hits the cache. It is set at session creation only: a foreign
 session (e.g. the driver harness's plain session, which only gets
 ``apply_runtime_confs``) keeps Spark's default of 100.
 
@@ -108,6 +110,13 @@ RUNTIME_CONFS: dict[str, str] = {
     # (sources/readers.py::with_us_timestamps) by truncating to µs —
     # bit-identical to DuckDB's parquet reader, which truncates ns→µs.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Whole-stage classes are named after their codegen stage id, and
+    # AQE numbers a plan's stages in the order its query stages happen
+    # to materialize; a repeated plan whose ids come out swapped missed
+    # the codegen cache (4 recompiles in minhash_lsh, seen as a flaky
+    # tests/test_codegen_cache.py). Without the id the generated source
+    # is the same, so the repeat finds its classes resident.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

@@ -27,13 +27,10 @@ from steel_energy_consumption_prediction_using_pyspark_spark.operators.relationa
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
     T,
     exact_pct_sql,
+    asset_path,
     fixture_fingerprint,
-    fs_key_lock,
-    is_published,
-    key_lock,
-    publish_dir,
+    publish_asset,
     register,
-    scratch_name,
     ts_str,
 )
 
@@ -52,60 +49,40 @@ def q_scan_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- S1: CSV ingest (the reference's literal entry path) --------------------
 
-# One CSV materialization per (session, sf_dir) — the query under test
+# The CSV materialization is a published asset — the query under test
 # is the READ path (inferSchema + header + name normalization), not the
-# write; caching the export keeps repeated driver/bench invocations
-# from re-paying it (same amortization pattern as the graph edge cache).
-_CSV_EXPORT_CACHE: dict[tuple[str, str], str] = {}
-
-
+# write; publishing the export once keeps repeated driver/bench
+# invocations from re-paying it.
 def _orders_csv(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fp = fixture_fingerprint(sf_dir, "orders")
-    path = _CSV_EXPORT_CACHE.get(key)
-    if path is not None and is_published(path, fp):
-        return path
-    with key_lock("csv_export", key):
-        path = _CSV_EXPORT_CACHE.get(key)
-        if path is not None and is_published(path, fp):
-            return path
-        # Invalidate BEFORE the overwrite-write: a stale entry (dir
-        # deleted externally, now being recreated) would let lock-free
-        # fast-path readers validate a half-written directory.
-        _CSV_EXPORT_CACHE.pop(key, None)
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        # Full-path mangle, never basename: distinct fixture dirs
-        # sharing a basename must not share a published asset
-        # (judge advice r7).
-        path = os.path.join(
-            repo_root, ".scratch", "csv_orders_" + scratch_name(sf_dir)
-        )
-
-        # Reference-style unsafe headers (dots + parens,
-        # SteelPred.py:139-146) so the normalization path is genuinely
-        # exercised by the read-back.
-        def _build(tmp: str) -> None:
-            (
-                T(spark, sf_dir, "orders")
-                .select(
-                    F.col("o_orderkey").alias("Order_Key"),
-                    F.col("o_orderpriority").alias("Order.Priority"),
-                    F.col("o_totalprice").alias("Total(Price)"),
-                )
-                .write.mode("overwrite")
-                .option("header", True)
-                .csv(tmp)
+    # Reference-style unsafe headers (dots + parens,
+    # SteelPred.py:139-146) so the normalization path is genuinely
+    # exercised by the read-back.
+    def _build(tmp: str) -> None:
+        (
+            T(spark, sf_dir, "orders")
+            .select(
+                F.col("o_orderkey").alias("Order_Key"),
+                F.col("o_orderpriority").alias("Order.Priority"),
+                F.col("o_totalprice").alias("Total(Price)"),
             )
+            .write.mode("overwrite")
+            .option("header", True)
+            .csv(tmp)
+        )
 
-        # Cross-process single build + atomic publish (VERDICT r6 #2).
-        with fs_key_lock("csv_export", os.path.basename(path)):
-            publish_dir(path, _build, app_id=key[0], fingerprint=fp)
-        _CSV_EXPORT_CACHE[key] = path
-        return path
+    return _orders_asset(spark, sf_dir, "csv", _build)
+
+
+def _orders_asset(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
+    """Publish `build` as the `<kind>_orders_*` export of the orders
+    fixture (see util.publish_asset)."""
+    return publish_asset(
+        f"{kind}_export",
+        asset_path(f"{kind}_orders_", sf_dir),
+        fixture_fingerprint(sf_dir, "orders"),
+        build,
+        spark.sparkContext.applicationId,
+    )
 
 
 def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,50 +113,21 @@ def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FMT_EXPORT_CACHE: dict[tuple[str, str, str], str] = {}
-
-
 def _orders_export(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    """Materialize the orders fixture in `fmt` (orc | json) under
-    .scratch/ once per (session, sf, format) — the non-CSV ingest
-    twins of _orders_csv. Plain column names here: the dirty-header
-    normalization path is csv_ingest's job."""
-    import os
+    """Publish the orders fixture in `fmt` (orc | json) under .scratch/
+    — the non-CSV ingest twins of _orders_csv. Plain column names here:
+    the dirty-header normalization path is csv_ingest's job."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    fp = fixture_fingerprint(sf_dir, "orders")
-    path = _FMT_EXPORT_CACHE.get(key)
-    if path is not None and is_published(path, fp):
-        return path
-    with key_lock("fmt_export", key):
-        path = _FMT_EXPORT_CACHE.get(key)
-        if path is not None and is_published(path, fp):
-            return path
-        # Invalidate before the write — see _orders_csv.
-        _FMT_EXPORT_CACHE.pop(key, None)
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        path = os.path.join(
-            repo_root,
-            ".scratch",
-            f"{fmt}_orders_" + scratch_name(sf_dir),
+    def _build(tmp: str) -> None:
+        (
+            T(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_orderpriority", "o_totalprice")
+            .write.mode("overwrite")
+            .format(fmt)
+            .save(tmp)
         )
 
-        def _build(tmp: str) -> None:
-            (
-                T(spark, sf_dir, "orders")
-                .select("o_orderkey", "o_orderpriority", "o_totalprice")
-                .write.mode("overwrite")
-                .format(fmt)
-                .save(tmp)
-            )
-
-        # Cross-process single build + atomic publish (VERDICT r6 #2).
-        with fs_key_lock("fmt_export", os.path.basename(path)):
-            publish_dir(path, _build, app_id=key[0], fingerprint=fp)
-        _FMT_EXPORT_CACHE[key] = path
-        return path
+    return _orders_asset(spark, sf_dir, fmt, _build)
 
 
 def q_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,46 +186,18 @@ def q_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   JSON: truncated record → ALL fields null + _corrupt;
 #         type-mismatched field → that field null, others kept.
 
-_DIRTY_CACHE: dict[tuple[str, str, str], str] = {}
-
-
 def _dirty_export(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Write the corrupted raw-text fixture once per (session, sf,
-    kind). Lines are BUILT as strings (never to_json/csv writers) so
-    every corrupt line is reproducible by the oracle's concatenation;
-    corruption truncates BEFORE the price value, so no double→string
-    formatting ever needs cross-engine agreement."""
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    fp = fixture_fingerprint(sf_dir, "orders")
-    path = _DIRTY_CACHE.get(key)
-    if path is not None and is_published(path, fp):
-        return path
-    with key_lock("dirty_export", key):
-        path = _DIRTY_CACHE.get(key)
-        if path is not None and is_published(path, fp):
-            return path
-        # Invalidate before the write — see _orders_csv.
-        _DIRTY_CACHE.pop(key, None)
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        path = os.path.join(
-            repo_root,
-            ".scratch",
-            f"{kind}_orders_" + scratch_name(sf_dir),
-        )
-        # Cross-process single build + atomic publish (VERDICT r6 #2).
-        with fs_key_lock("dirty_export", os.path.basename(path)):
-            publish_dir(
-                path,
-                lambda tmp: _dirty_export_build(spark, sf_dir, kind, tmp),
-                app_id=key[0],
-                fingerprint=fp,
-            )
-        _DIRTY_CACHE[key] = path
-        return path
+    """Publish the corrupted raw-text fixture `kind`. Lines are BUILT as
+    strings (never to_json/csv writers) so every corrupt line is
+    reproducible by the oracle's concatenation; corruption truncates
+    BEFORE the price value, so no double→string formatting ever needs
+    cross-engine agreement."""
+    return _orders_asset(
+        spark,
+        sf_dir,
+        kind,
+        lambda tmp: _dirty_export_build(spark, sf_dir, kind, tmp),
+    )
 
 
 def _dirty_export_build(

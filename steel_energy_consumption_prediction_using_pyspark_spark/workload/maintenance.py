@@ -34,6 +34,7 @@ from steel_energy_consumption_prediction_using_pyspark_spark.workload.util impor
     key_lock,
     publish_dir,
     scratch_name,
+    scratch_root,
     ts_str,
 )
 
@@ -628,12 +629,8 @@ def q_table_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     are additionally pinned in tests/test_maintenance.py."""
     import os
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     base = os.path.join(
-        repo_root,
-        ".scratch",
+        scratch_root(),
         "maint_{}_{}".format(
             spark.sparkContext.applicationId,
             os.path.basename(sf_dir.rstrip("/")),

@@ -786,6 +786,7 @@ def q_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
         key_lock,
+        scratch_root,
     )
 
     data = steel_energy(spark, QUERY_ROWS)
@@ -798,13 +799,8 @@ def q_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         train
     )
     train.unpersist(blocking=False)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     path = os.path.join(
-        repo_root,
-        ".scratch",
-        f"pipeline_roundtrip_{spark.sparkContext.applicationId}",
+        scratch_root(), f"pipeline_roundtrip_{spark.sparkContext.applicationId}"
     )
     # appId-scoped scratch (cross-process safe); serialized against a
     # concurrent same-session call, removed once loaded (MLReader

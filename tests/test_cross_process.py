@@ -24,6 +24,9 @@ import signal
 import subprocess
 import sys
 import textwrap
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -33,6 +36,7 @@ sys.path.insert(0, REPO)
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (  # noqa: E402
     fs_key_lock,
     is_published,
+    publish_asset,
     publish_dir,
 )
 
@@ -152,6 +156,151 @@ def test_scratch_name_full_path_no_basename_collision(tmp_path):
     b = str(tmp_path / "runB" / "sf0.001")
     assert scratch_name(a) != scratch_name(b)
     assert scratch_name(a) == scratch_name(a + "/")
+
+
+def _private_scratch(monkeypatch, tmp_path):
+    """Point scratch_root (and so the lockfiles) into tmp_path."""
+    from steel_energy_consumption_prediction_using_pyspark_spark.workload import (
+        util,
+    )
+
+    monkeypatch.setattr(util, "scratch_root", lambda: str(tmp_path))
+    return str(tmp_path / "asset")
+
+
+def _counting_build(calls, lock, delay=0.0):
+    def build(tmp):
+        with lock:
+            calls.append(tmp)
+        time.sleep(delay)
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "part-00000"), "w") as fh:
+            fh.write(str(len(calls)))
+
+    return build
+
+
+def test_publish_asset_builds_once_under_concurrent_callers(tmp_path, monkeypatch):
+    """8 threads first-touch the same asset at once: exactly one
+    builds, every caller gets the published path back."""
+    final = _private_scratch(monkeypatch, tmp_path)
+    calls, guard = [], threading.Lock()
+    build = _counting_build(calls, guard, delay=0.2)
+    gate = threading.Barrier(8)
+
+    def call():
+        gate.wait(timeout=30)
+        return publish_asset("testns_pa", final, "fp-A", build, "app-1")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(call) for _ in range(8)]
+            paths = [f.result(timeout=60) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert paths == [final] * 8
+    assert len(calls) == 1
+    assert is_published(final, "fp-A")
+
+
+def test_publish_asset_reuses_published_without_state_or_locks(tmp_path, monkeypatch):
+    """An asset another process already published (publish_dir called
+    directly; nothing in this process remembers it) is returned on the
+    lock-free fast path: no build, and no wait on a held builder lock."""
+    from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
+        key_lock,
+    )
+
+    final = _private_scratch(monkeypatch, tmp_path)
+    calls, guard = [], threading.Lock()
+    with fs_key_lock("testns_pa", "external"):
+        assert publish_dir(
+            final, _counting_build(calls, guard), fingerprint="fp-A"
+        )
+
+    def must_not_build(tmp):
+        raise AssertionError("published asset was rebuilt")
+
+    # The pool outlives the held lock, so a failing (blocked) call
+    # is released before the pool joins its thread.
+    with ThreadPoolExecutor(1) as pool, key_lock("testns_pa", final):
+        fut = pool.submit(
+            publish_asset, "testns_pa", final, "fp-A", must_not_build, "app-2"
+        )
+        assert fut.result(timeout=10) == final
+
+
+def test_publish_asset_fingerprint_change_rebuilds_once(tmp_path, monkeypatch):
+    final = _private_scratch(monkeypatch, tmp_path)
+    calls, guard = [], threading.Lock()
+    build = _counting_build(calls, guard, delay=0.1)
+    publish_asset("testns_pa", final, "fp-A", build, "app-1")
+    publish_asset("testns_pa", final, "fp-A", build, "app-1")
+    assert len(calls) == 1
+    # The source changed: concurrent callers see the new fingerprint,
+    # exactly one of them rebuilds.
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futs = [
+            pool.submit(publish_asset, "testns_pa", final, "fp-B", build, "a")
+            for _ in range(4)
+        ]
+        assert [f.result(timeout=60) for f in futs] == [final] * 4
+    assert len(calls) == 2
+    assert is_published(final, "fp-B") and not is_published(final, "fp-A")
+    assert open(os.path.join(final, "part-00000")).read() == "2"
+
+
+def test_asset_paths_stay_evictable(tmp_path, monkeypatch):
+    """Every published asset of a fixture dir sits at most two levels
+    under scratch_root() and carries scratch_name(sf_dir) in its name
+    and in its lockfile name — the layout that cold-start eviction
+    (perfbench/run.py::_evict) finds assets by. Each real call site
+    runs up to its fs_key_lock, which records the name and stops it
+    before any build."""
+    from types import SimpleNamespace
+
+    from steel_energy_consumption_prediction_using_pyspark_spark.workload import (
+        core,
+        graph,
+        text,
+        util,
+        vector,
+    )
+
+    class Captured(Exception):
+        pass
+
+    def capture(namespace, name):
+        raise Captured(name)
+
+    monkeypatch.setattr(util, "fs_key_lock", capture)
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app-test"),
+        sql=lambda q: None,
+    )
+    sf_dir = str(tmp_path / "perfbench_alias" / "sf0.001")
+    sites = [
+        lambda: core._orders_csv(spark, sf_dir),
+        lambda: core._orders_export(spark, sf_dir, "orc"),
+        lambda: core._orders_export(spark, sf_dir, "json"),
+        lambda: core._dirty_export(spark, sf_dir, "csv_dirty"),
+        lambda: core._dirty_export(spark, sf_dir, "jsonl_corrupt"),
+        lambda: graph.materialized_edges(spark, sf_dir),
+        lambda: text.materialized_sig_store(spark, sf_dir),
+        lambda: vector.materialized_ann_index(spark, sf_dir),
+    ]
+    names = []
+    for site in sites:
+        with pytest.raises(Captured) as exc:
+            site()
+        (name,) = exc.value.args
+        names.append(name)
+        parts = name.split(os.sep)
+        assert ".." not in parts and 1 <= len(parts) <= 2, name
+        assert util.scratch_name(sf_dir) in parts[-1], name
+    assert len(set(names)) == len(sites)
 
 
 def test_lock_prune_skips_held_locks():
